@@ -632,7 +632,7 @@ class Engine:
         freshness: str = "strict",
     ) -> dict:
         """EXPLAIN for the raw-SQL surface: the formatted physical
-        plan plus the structural summary PLANS.md records (shuffle /
+        plan plus the plans.explain structural summary (shuffle /
         broadcast / scan counts, join strategies, PushedFilters,
         ReadSchema) — the plan-discipline story, served over the
         wire. Validation is identical to submit_sql (read-only

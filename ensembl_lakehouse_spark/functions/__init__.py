@@ -2,6 +2,10 @@
 
 Split by domain:
 
+- :mod:`fixed`    — fixed-point SQL text: half-up cents
+  (``cents_sql``) and DECIMAL(38,0)-widened basis-point ratios
+  (``scaled_ratio_sql``), the rules that keep money columns
+  hash-identical to the DuckDB oracles.
 - :mod:`hashing`  — cross-engine-deterministic hashes (md5-derived
   integers, polynomial rolling hash) used by dedup/fingerprint ops.
 - :mod:`text`     — tokenization / shingling expression builders.
@@ -9,8 +13,9 @@ Split by domain:
   functions (index-ordered, so DuckDB oracles match bit-for-bit).
 
 Every helper returns a pyspark Column built only from built-in
-``pyspark.sql.functions`` — they inline into whole-stage codegen and
-never leave the JVM, which is the 100 TB hot-path requirement.
+``pyspark.sql.functions``, or (``fixed``) SQL text for ``F.expr`` —
+they inline into whole-stage codegen and never leave the JVM, which
+is the 100 TB hot-path requirement.
 """
 
 from ensembl_lakehouse_spark.functions.hashing import (  # noqa: F401

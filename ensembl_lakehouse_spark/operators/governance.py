@@ -49,6 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ensembl_lakehouse_spark.functions.fixed import cents_sql
 from ensembl_lakehouse_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -83,9 +84,7 @@ def retention_audit(
         ev.select(
             "event_type",
             F.unix_timestamp("ts").alias("s"),
-            F.expr(
-                "CAST(floor(value * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-            ).alias("cents"),
+            F.expr(cents_sql("value")).alias("cents"),
         )
         .crossJoin(F.broadcast(anchor))
         .withColumn(
@@ -323,12 +322,7 @@ def subject_access_report(
             F.sum(F.coalesce("li_rows", F.lit(0)))
             .cast("long")
             .alias("lineitem_rows"),
-            F.sum(
-                F.expr(
-                    "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-                    "AS BIGINT)"
-                )
-            ).alias("spend_cents"),
+            F.sum(F.expr(cents_sql("o_totalprice"))).alias("spend_cents"),
             F.min(F.col("o_orderdate").cast("date")).alias("first_order"),
             F.max(F.col("o_orderdate").cast("date")).alias("last_order"),
         )

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ensembl_lakehouse_spark.functions.fixed import cents_sql, scaled_ratio_sql
 from ensembl_lakehouse_spark.functions.stats import pearson_e6
 from ensembl_lakehouse_spark.sources.tables import load_spread, load_table
 
@@ -2304,10 +2305,7 @@ def events_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
             F.sum(
-                F.expr(
-                    f"CAST(floor(value * {DOW_VALUE_SCALE} + "
-                    f"CAST(0.5 AS DOUBLE)) AS BIGINT)"
-                )
+                F.expr(cents_sql("value", DOW_VALUE_SCALE))
             ).alias("value_fp"),
         )
     )
@@ -4140,8 +4138,7 @@ def order_width_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("cents"),
     )
     per_order = li.groupBy("l_orderkey").agg(
@@ -4169,10 +4166,7 @@ def order_width_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "rev_share_bp",
-            F.expr(
-                "CAST((CAST(rev_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(rev_cents) OVER () AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("rev_cents", "SUM(rev_cents) OVER ()")),
         )
         .select(
             "band", "n_orders", "lines", "rev_cents",
@@ -4972,9 +4966,7 @@ def events_type_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     cents = events.select(
         "event_type",
-        F.expr(
-            "CAST(floor(value * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     return (
         cents.groupBy("event_type")
@@ -5049,9 +5041,7 @@ def user_volume_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST(floor(unix_timestamp(ts) / 86400) AS BIGINT)"
             ).alias("day"),
-            F.expr(
-                "CAST(floor(value * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-            ).alias("cents"),
+            F.expr(cents_sql("value")).alias("cents"),
         )
         .groupBy("user_id")
         .agg(
@@ -5233,9 +5223,7 @@ def user_first_day_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(floor(unix_timestamp(ts) / 86400) AS BIGINT)"
         ).alias("day"),
-        F.expr(
-            "CAST(floor(value * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     ).groupBy("user_id", "day").agg(F.sum("cents").alias("ud_cents"))
     first_day = per_ud.withColumn(
         "d0", F.expr("MIN(day) OVER (PARTITION BY user_id)")
@@ -6505,9 +6493,7 @@ def session_depth_value_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE row_number() OVER (PARTITION BY user_id, "
             "session_num ORDER BY ts, event_id) END"
         ).alias("depth"),
-        F.expr(
-            "CAST(floor(value * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     return (
         depth.groupBy("depth")

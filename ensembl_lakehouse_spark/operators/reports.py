@@ -25,18 +25,21 @@ first-class, oracle-checked operator:
 - ``revenue_concentration`` — customers-to-reach-50/80/95% revenue
   per market segment (the "how top-heavy is this book" report).
 
-Determinism rules (memory: oracle-determinism-rules): per-row
-fixed-point BIGINT before any SUM, integer DIV for every ratio
-(Spark ``DIV`` and DuckDB ``//`` both truncate toward zero —
-verified on negatives, so signed growth is safe), ntile ordered
-with a full unique tie-break, no transcendentals (Benford's
-expected shares are hard-coded integer literals).
+Determinism rules: per-row fixed-point BIGINT before any SUM
+(``functions.fixed.cents_sql``), integer DIV for every ratio with
+the numerator widened to DECIMAL(38,0)
+(``functions.fixed.scaled_ratio_sql``; Spark ``DIV`` and DuckDB
+``//`` both truncate toward zero — verified on negatives, so signed
+growth is safe), ntile ordered with a full unique tie-break, no
+transcendentals (Benford's expected shares are hard-coded integer
+literals). The oracles spell both rules out by hand.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ensembl_lakehouse_spark.functions.fixed import cents_sql, scaled_ratio_sql
 from ensembl_lakehouse_spark.functions.stats import pearson_e6
 from ensembl_lakehouse_spark.sources.tables import load_spread, load_table
 
@@ -162,12 +165,7 @@ def orders_rfm_segments(
             "datediff(max(CAST(o_orderdate AS DATE)), DATE '1970-01-01')"
         ).alias("last_epoch_days"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(
-            F.expr(
-                "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-                "AS BIGINT)"
-            )
-        ).alias("monetary_cents"),
+        F.sum(F.expr(cents_sql("o_totalprice"))).alias("monetary_cents"),
     )
     from ensembl_lakehouse_spark.operators.tiling import with_global_ntiles
 
@@ -321,9 +319,7 @@ def target_encoding(
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment", "c_nationkey"
@@ -480,10 +476,7 @@ def revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag", F.year("l_shipdate").alias("ship_year")
         ).agg(
             F.sum(
-                F.expr(
-                    "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + "
-                    "CAST(0.5 AS DOUBLE)) AS BIGINT)"
-                )
+                F.expr(cents_sql("l_extendedprice * (1 - l_discount)"))
             ).alias("rev_cents")
         )
     )
@@ -497,10 +490,7 @@ def revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "growth_bp",
-            F.expr(
-                "CAST((CAST(rev_cents - prev_cents AS DECIMAL(38,0)) "
-                "* 10000) DIV prev_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("rev_cents - prev_cents", "prev_cents")),
         )
         .select("l_returnflag", "ship_year", "rev_cents", "prev_cents", "growth_bp")
         .orderBy("l_returnflag", "ship_year")
@@ -549,9 +539,7 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
@@ -652,15 +640,10 @@ def discount_band_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg to ~12 bands.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
+        F.expr(cents_sql("l_discount")).alias("band_pct"),
+        F.expr(cents_sql("l_quantity", 1)).alias("qty"),
         F.expr(
-            "CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("band_pct"),
-        F.expr(
-            "CAST(floor(l_quantity + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("qty"),
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (1 - l_discount)")
         ).alias("rev_cents"),
     )
     bands = li.groupBy("band_pct").agg(
@@ -675,10 +658,7 @@ def discount_band_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands.crossJoin(F.broadcast(total))
         .withColumn(
             "revenue_share_bp",
-            F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000)"
-                " DIV total_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("revenue_cents", "total_cents")),
         )
         .select(
             "band_pct", "n_lines", "total_qty", "revenue_cents",
@@ -792,10 +772,7 @@ def brand_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
         "p_brand",
         "p_type",
-        F.expr(
-            "CAST(floor(p_retailprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("p_retailprice")).alias("cents"),
     )
     return (
         part.groupBy("p_brand")
@@ -854,9 +831,7 @@ def supplier_nation_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_nationkey",
-        F.expr(
-            "CAST(floor(s_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("bal_cents"),
+        F.expr(cents_sql("s_acctbal")).alias("bal_cents"),
     )
     return (
         supp.join(
@@ -1043,9 +1018,7 @@ def discount_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr(
-            "CAST(floor(l_discount * 10000 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("x"),
+        F.expr(cents_sql("l_discount", 10000)).alias("x"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("y"),
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -1217,8 +1190,7 @@ def supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("cents"),
     )
     supp = load_table(spark, sf_dir, "supplier").select(
@@ -1319,10 +1291,7 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(datediff(anchor_date, CAST(o_orderdate AS DATE)) "
                 f"AS BIGINT) DIV {BACKLOG_BAND_DAYS}"
             ).alias("age_band"),
-            F.expr(
-                "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-                "AS BIGINT)"
-            ).alias("cents"),
+            F.expr(cents_sql("o_totalprice")).alias("cents"),
         )
     )
     return (
@@ -1542,8 +1511,7 @@ def region_revenue_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("cents"),
     )
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1570,8 +1538,9 @@ def region_revenue_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.withColumn(
             "share_bp",
             F.expr(
-                "CAST((CAST(rev_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(rev_cents) OVER (PARTITION BY yr) AS BIGINT)"
+                scaled_ratio_sql(
+                    "rev_cents", "SUM(rev_cents) OVER (PARTITION BY yr)"
+                )
             ),
         )
         .withColumn(
@@ -1634,13 +1603,9 @@ def part_type_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
+        F.expr(cents_sql("l_extendedprice")).alias("list_cents"),
         F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("list_cents"),
-        F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("net_cents"),
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
@@ -1656,17 +1621,11 @@ def part_type_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         agg.withColumn(
             "giveback_bp",
-            F.expr(
-                "CAST((CAST(list_cents - net_cents AS DECIMAL(38,0)) "
-                "* 10000) DIV list_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("list_cents - net_cents", "list_cents")),
         )
         .withColumn(
             "revenue_share_bp",
-            F.expr(
-                "CAST((CAST(net_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(net_cents) OVER () AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("net_cents", "SUM(net_cents) OVER ()")),
         )
         .select(
             "p_type", "n_lines", "list_cents", "net_cents",
@@ -1718,9 +1677,7 @@ def seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders").select(
         F.expr("month(o_orderdate)").alias("mon"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     return (
         orders.groupBy("mon")
@@ -1730,16 +1687,12 @@ def seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "share_bp",
-            F.expr(
-                "CAST((CAST(rev_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(rev_cents) OVER () AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("rev_cents", "SUM(rev_cents) OVER ()")),
         )
         .withColumn(
             "index_bp",
             F.expr(
-                "CAST((CAST(rev_cents AS DECIMAL(38,0)) * 120000) DIV "
-                "SUM(rev_cents) OVER () AS BIGINT)"
+                scaled_ratio_sql("rev_cents", "SUM(rev_cents) OVER ()", 120000)
             ),
         )
         .select("mon", "n_orders", "rev_cents", "share_bp", "index_bp")
@@ -1879,8 +1832,7 @@ def part_supply_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey",
         "l_suppkey",
         F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("cents"),
     )
     cell = li.groupBy("l_partkey", "l_suppkey").agg(
@@ -2039,9 +1991,7 @@ def part_name_price_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     total joins by broadcast. Support-floored to kill noise terms.
     """
     part = load_table(spark, sf_dir, "part").select(
-        F.expr(
-            "CAST(floor(p_retailprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("p_retailprice")).alias("cents"),
         F.split(F.col("p_name"), " ").alias("terms"),
     )
     exploded = part.select(
@@ -2126,9 +2076,7 @@ def balance_activity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
-        F.expr(
-            "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("x"),
+        F.expr(cents_sql("c_acctbal")).alias("x"),
     )
     counts = (
         load_table(spark, sf_dir, "orders")
@@ -2211,8 +2159,7 @@ def revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("year(l_shipdate)").alias("yr"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
         F.expr(
-            "CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) "
-            "* 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")
         ).alias("cents"),
     )
     yearly = li.groupBy("yr").agg(
@@ -2305,9 +2252,7 @@ def calendar_adjusted_monthly_index(spark: SparkSession, sf_dir: str) -> DataFra
         F.expr("year(o_orderdate)").alias("yr"),
         F.expr("month(o_orderdate)").alias("mon"),
         F.expr("CAST(day(last_day(o_orderdate)) AS BIGINT)").alias("dim"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     ym = orders.groupBy("yr", "mon").agg(
         F.sum("cents").alias("rev_cents"),
@@ -2325,8 +2270,10 @@ def calendar_adjusted_monthly_index(spark: SparkSession, sf_dir: str) -> DataFra
         .withColumn(
             "index_bp",
             F.expr(
-                "CAST((CAST(rev_per_day AS DECIMAL(38,0)) * 10000) DIV "
-                "(SUM(rev_cents) OVER () DIV SUM(days) OVER ()) AS BIGINT)"
+                scaled_ratio_sql(
+                    "rev_per_day",
+                    "(SUM(rev_cents) OVER () DIV SUM(days) OVER ())",
+                )
             ),
         )
         .select(
@@ -2615,9 +2562,7 @@ def customer_ltv_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "year(o_orderdate) * 12 + month(o_orderdate) - 1"
         ).alias("m"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     # localCheckpoint (r11, guide §3.3): the cohort spine feeds sizes
     # AND the triangle join — uncheckpointed, the orders scan +
@@ -2814,10 +2759,7 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     |nations|-row results, rank over ≤ 25 rows."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"),
@@ -2830,9 +2772,7 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -2922,10 +2862,7 @@ def parts_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types| rows. No join at all — p_type rides in via broadcast."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_type"
@@ -3021,10 +2958,7 @@ def part_brand_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: part only (dim-sized) — one |brands|-row aggregate."""
     part = load_table(spark, sf_dir, "part").select(
         "p_brand",
-        F.expr(
-            "CAST(floor(p_retailprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("p_retailprice")).alias("cents"),
     )
     return (
         part.groupBy("p_brand")
@@ -3194,15 +3128,10 @@ def lineitem_discount_effectiveness(spark: SparkSession, sf_dir: str) -> DataFra
     (≤ 11·3 cells); the band totals ride a window over those
     cells."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        F.expr(
-            "CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("disc_pct"),
+        F.expr(cents_sql("l_discount")).alias("disc_pct"),
         "l_returnflag",
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     return (
         li.groupBy("disc_pct", "l_returnflag")
@@ -3272,9 +3201,7 @@ def supplier_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
-        F.expr(
-            "CAST(floor(s_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("s_acctbal")).alias("cents"),
     )
     tiled = with_global_ntile(
         sup, "cents", "s_suppkey", 10, "decile",
@@ -3293,10 +3220,7 @@ def supplier_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "pos_share_bp",
-            F.expr(
-                "CAST((CAST(pos_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(pos_cents) OVER () AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("pos_cents", "SUM(pos_cents) OVER ()")),
         )
         .orderBy("decile")
     )
@@ -3424,10 +3348,7 @@ def supplier_part_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_spread(spark, sf_dir, "lineitem", "l_suppkey", "l_partkey").select(
         "l_suppkey",
         "l_partkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_type"
@@ -3506,15 +3427,11 @@ def customer_balance_spend_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     rollup."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.expr(
-            "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("bal_cents"),
+        F.expr(cents_sql("c_acctbal")).alias("bal_cents"),
     )
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     spend = orders.groupBy("c_custkey").agg(
         F.sum("cents").alias("spend_cents")
@@ -3607,10 +3524,7 @@ def holiday_revenue_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over ≤ |years|·3 cells."""
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("day"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     span = orders.agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
@@ -3652,8 +3566,10 @@ def holiday_revenue_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "share_bp",
             F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "(SUM(revenue_cents) OVER (PARTITION BY year)) AS BIGINT)"
+                scaled_ratio_sql(
+                    "revenue_cents",
+                    "(SUM(revenue_cents) OVER (PARTITION BY year))",
+                )
             ),
         )
         .select(
@@ -3721,10 +3637,7 @@ def orders_weekday_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') + 3)"
             " % 7"
         ).alias("weekday"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     return (
         orders.groupBy("weekday")
@@ -3777,8 +3690,7 @@ def returns_rate_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("month"),
         (F.col("l_returnflag") == "R").cast("int").alias("ret"),
         F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (1 - l_discount)")
         ).alias("rev_cents"),
     )
     return (
@@ -3797,10 +3709,7 @@ def returns_rate_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "returned_rev_bp",
-            F.expr(
-                "CAST((CAST(returned_cents AS DECIMAL(38,0)) * 10000)"
-                " DIV revenue_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("returned_cents", "revenue_cents")),
         )
         .orderBy("month")
     )
@@ -3848,12 +3757,8 @@ def discount_elasticity_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back (≤ |types| rows)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr(
-            "CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("pct"),
-        F.expr(
-            "CAST(floor(l_quantity + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("qty"),
+        F.expr(cents_sql("l_discount")).alias("pct"),
+        F.expr(cents_sql("l_quantity", 1)).alias("qty"),
     )
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_type"
@@ -3940,10 +3845,7 @@ def segment_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point map + percentile partial agg (order-invariant)."""
     orders = load_spread(spark, sf_dir, "orders", "o_custkey").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
@@ -4032,10 +3934,7 @@ def customer_value_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year(F.col("o_orderdate").cast("date")).alias("yr"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_year = orders.groupBy("o_custkey", "yr").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4110,10 +4009,7 @@ def part_size_price_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — one |sizes|-row aggregate."""
     part = load_table(spark, sf_dir, "part").select(
         "p_size",
-        F.expr(
-            "CAST(floor(p_retailprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("p_retailprice")).alias("cents"),
     )
     return (
         part.groupBy("p_size")
@@ -4179,16 +4075,12 @@ def tax_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One partial agg over lineitem to ~9 bands."""
     li = load_table(spark, sf_dir, "lineitem").select(
+        F.expr(cents_sql("l_tax")).alias("band_pct"),
         F.expr(
-            "CAST(floor(l_tax * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("band_pct"),
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (1 - l_discount)")
         ).alias("rev_cents"),
         F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * l_tax * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (1 - l_discount) * l_tax")
         ).alias("tax_cents"),
     )
     return (
@@ -4200,10 +4092,7 @@ def tax_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "effective_tax_bp",
-            F.expr(
-                "CAST((CAST(tax_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV revenue_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("tax_cents", "revenue_cents")),
         )
         .orderBy("band_pct")
     )
@@ -4242,9 +4131,7 @@ def order_width_discount_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.expr(
-            "CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("pct"),
+        F.expr(cents_sql("l_discount")).alias("pct"),
     )
     per_order = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).cast("long").alias("width"),
@@ -4307,10 +4194,7 @@ def orders_priority_value_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     interleaved A/B measured off=1.205/1.265 vs on=1.354/1.447 twice."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     return (
         orders.groupBy("o_orderpriority")
@@ -4440,10 +4324,7 @@ def order_line_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
     band agg — never a window over raw lines."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     per_order = li.groupBy("l_orderkey").agg(
         F.sum("cents").alias("total_cents"),
@@ -4504,9 +4385,7 @@ def customer_nation_mix_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
-        F.expr(
-            "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("bal_cents"),
+        F.expr(cents_sql("c_acctbal")).alias("bal_cents"),
     )
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), "n_name"
@@ -4562,10 +4441,7 @@ def monthly_revenue_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("year"),
         F.month("o_orderdate").alias("month"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     monthly = orders.groupBy("year", "month").agg(
         F.sum("cents").alias("m_cents")
@@ -4622,10 +4498,7 @@ def region_segment_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the share window runs on the ≤|regions|×|segments| grid."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey",
@@ -4652,8 +4525,10 @@ def region_segment_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.withColumn(
             "region_share_bp",
             F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "(SUM(revenue_cents) OVER (PARTITION BY r_name)) AS BIGINT)"
+                scaled_ratio_sql(
+                    "revenue_cents",
+                    "(SUM(revenue_cents) OVER (PARTITION BY r_name))",
+                )
             ),
         )
         .orderBy("r_name", "c_mktsegment")
@@ -4774,10 +4649,7 @@ def top_customer_share_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg — max and sum compose in the same pass."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum("cents").alias("cust_cents")
@@ -4841,10 +4713,7 @@ def orders_quarter_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "year(o_orderdate) * 10 + quarter(o_orderdate)"
         ).alias("yq"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     quarterly = (
         orders.groupBy("yq")
@@ -4904,9 +4773,7 @@ def supplier_balance_quartiles_by_nation(
     percentile aggregate, nation dim broadcast after the agg."""
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_nationkey",
-        F.expr(
-            "CAST(floor(s_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("s_acctbal")).alias("cents"),
     )
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nationkey"), "n_name"
@@ -4981,10 +4848,7 @@ def linestatus_mix_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("month"),
         "l_returnflag",
         "l_linestatus",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice * (1 - l_discount)")).alias("cents"),
     )
     grid = li.groupBy("month", "l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
@@ -5114,10 +4978,7 @@ def customer_value_trend_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     key), one custkey agg, one broadcast-joined segment agg."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
         F.expr("CAST(o_orderdate AS DATE)").alias("od"),
     )
     ranked = orders.select(
@@ -5218,10 +5079,7 @@ def customer_spend_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum("cents").alias("cust_cents")
@@ -5356,20 +5214,11 @@ def tax_discount_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (100 TB): one (tax_band, discount_band) partial agg to a
     ≤|tax bands|×4 grid."""
     li = load_table(spark, sf_dir, "lineitem").select(
+        F.expr(cents_sql("l_tax")).alias("tax_pct"),
+        F.expr(cents_sql("l_discount")).alias("disc_pct"),
+        F.expr(cents_sql("l_extendedprice")).alias("gross_cents"),
         F.expr(
-            "CAST(floor(l_tax * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("tax_pct"),
-        F.expr(
-            "CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("disc_pct"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("gross_cents"),
-        F.expr(
-            "CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax)"
-            " * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")
         ).alias("take_cents"),
     )
     banded = li.select(
@@ -5392,10 +5241,7 @@ def tax_discount_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "take_rate_bp",
-            F.expr(
-                "CAST((CAST(take_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV gross_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("take_cents", "gross_cents")),
         )
         .orderBy("tax_pct", "discount_band")
     )
@@ -5460,10 +5306,7 @@ def price_index_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month(CAST(l_shipdate AS DATE)) - 1"
         ).alias("m"),
         F.col("l_partkey").alias("pk"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
     )
     # localCheckpoint (r11, guide §3.3): those same 3 references each
@@ -5491,10 +5334,7 @@ def price_index_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the 100 TB target — DECIMAL(38,0) numerator, truncating
             # DIV (the lift-op rule; oracle uses HUGEINT //)
             "index_bp",
-            F.expr(
-                "CAST((CAST(cur_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV base_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("cur_cents", "base_cents")),
         )
         .orderBy("m")
     )
@@ -5547,19 +5387,15 @@ def status_priority_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(
-            F.expr(
-                "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-                "AS BIGINT)"
-            )
-        ).alias("cents"),
+        F.sum(F.expr(cents_sql("o_totalprice"))).alias("cents"),
     )
     return (
         agg.withColumn(
             "status_share_bp",
             F.expr(
-                "CAST((CAST(cents AS DECIMAL(38,0)) * 10000) DIV "
-                "SUM(cents) OVER (PARTITION BY o_orderstatus) AS BIGINT)"
+                scaled_ratio_sql(
+                    "cents", "SUM(cents) OVER (PARTITION BY o_orderstatus)"
+                )
             ),
         )
         .orderBy("o_orderstatus", "o_orderpriority")
@@ -5606,10 +5442,7 @@ def quantity_band_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END"
         ).alias("returned"),
-        F.expr(
-            "CAST(floor(l_discount * 10000 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("disc_x10k"),
+        F.expr(cents_sql("l_discount", 10000)).alias("disc_x10k"),
     )
     return (
         li.groupBy("qty_band")
@@ -5673,18 +5506,8 @@ def brand_type_span(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_parts"),
             F.countDistinct("p_type").cast("long").alias("n_types"),
             F.countDistinct("p_size").cast("long").alias("n_sizes"),
-            F.min(
-                F.expr(
-                    "CAST(floor(p_retailprice * 100 + "
-                    "CAST(0.5 AS DOUBLE)) AS BIGINT)"
-                )
-            ).alias("min_price_cents"),
-            F.max(
-                F.expr(
-                    "CAST(floor(p_retailprice * 100 + "
-                    "CAST(0.5 AS DOUBLE)) AS BIGINT)"
-                )
-            ).alias("max_price_cents"),
+            F.min(F.expr(cents_sql("p_retailprice"))).alias("min_price_cents"),
+            F.max(F.expr(cents_sql("p_retailprice"))).alias("max_price_cents"),
         )
         .withColumn(
             "price_span_cents",
@@ -5728,10 +5551,7 @@ def segment_balance_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; output ≤ |segments| rows."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
-        F.expr(
-            "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("c_acctbal")).alias("cents"),
     )
     return (
         cust.groupBy("c_mktsegment")
@@ -5823,10 +5643,7 @@ def monthly_new_vs_repeat_revenue(
             "year(CAST(o_orderdate AS DATE)) * 12 + "
             "month(CAST(o_orderdate AS DATE)) - 1"
         ).alias("m"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     first = orders.groupBy("o_custkey").agg(F.min("m").alias("m0"))
     tagged = orders.join(first, "o_custkey").withColumn(
@@ -5846,8 +5663,7 @@ def monthly_new_vs_repeat_revenue(
         .withColumn(
             "new_share_bp",
             F.expr(
-                "CAST((CAST(new_cents AS DECIMAL(38,0)) * 10000) DIV "
-                "(new_cents + repeat_cents) AS BIGINT)"
+                scaled_ratio_sql("new_cents", "(new_cents + repeat_cents)")
             ),
         )
         .orderBy("m")
@@ -5899,10 +5715,7 @@ def spend_consistency_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     order count that fits a customer — then a ≤ bands re-agg."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_cust = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -5989,10 +5802,7 @@ def brand_return_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END").alias(
             "is_ret"
         ),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey"), F.col("p_brand")
@@ -6021,10 +5831,7 @@ def brand_return_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
             # truncates like DuckDB HUGEINT // (the lift-op rule —
             # DuckDB DECIMAL // would round)
             "value_at_risk_bp",
-            F.expr(
-                "CAST((CAST(returned_cents AS DECIMAL(38,0)) * 10000)"
-                " DIV revenue_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("returned_cents", "revenue_cents")),
         )
         .orderBy("p_brand")
     )
@@ -6083,10 +5890,7 @@ def price_index_paasche(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month(CAST(l_shipdate AS DATE)) - 1"
         ).alias("m"),
         F.col("l_partkey").alias("pk"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
     )
     # localCheckpoint (r11, guide §3.3): those same 3 references each
@@ -6114,10 +5918,7 @@ def price_index_paasche(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the 100 TB target — DECIMAL(38,0) numerator, truncating
             # DIV (the lift-op rule; oracle uses HUGEINT //)
             "index_bp",
-            F.expr(
-                "CAST((CAST(cur_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV base_cents AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("cur_cents", "base_cents")),
         )
         .orderBy("m")
     )
@@ -6182,10 +5983,7 @@ def price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month(CAST(l_shipdate AS DATE)) - 1"
         ).alias("m"),
         F.col("l_partkey").alias("pk"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
     )
     # localCheckpoint (r11, guide §3.3): those same 3 references each
@@ -6212,17 +6010,11 @@ def price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "lasp_bp",
-            F.expr(
-                "CAST((CAST(lasp_cur AS DECIMAL(38,0)) * 10000) "
-                "DIV lasp_base AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("lasp_cur", "lasp_base")),
         )
         .withColumn(
             "paas_bp",
-            F.expr(
-                "CAST((CAST(paas_cur AS DECIMAL(38,0)) * 10000) "
-                "DIV paas_base AS BIGINT)"
-            ),
+            F.expr(scaled_ratio_sql("paas_cur", "paas_base")),
         )
         .withColumn(
             "fisher_bp",
@@ -6386,10 +6178,7 @@ def order_value_band_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "year(CAST(o_orderdate AS DATE)) * 12 + "
             "month(CAST(o_orderdate AS DATE)) - 1"
         ).alias("m"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     ).withColumn(
         "band",
         F.expr(
@@ -6416,9 +6205,10 @@ def order_value_band_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             # numerator, truncating DIV (HUGEINT // in the oracle)
             "revenue_share_bp",
             F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV (SUM(revenue_cents) OVER (PARTITION BY m)) "
-                "AS BIGINT)"
+                scaled_ratio_sql(
+                    "revenue_cents",
+                    "(SUM(revenue_cents) OVER (PARTITION BY m))",
+                )
             ),
         )
         .orderBy("m", "band")
@@ -6474,10 +6264,7 @@ def size_demand_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_size"
@@ -6533,10 +6320,7 @@ def nation_negative_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg off the customer scan."""
     c = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
-        F.expr(
-            "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("bal_cents"),
+        F.expr(cents_sql("c_acctbal")).alias("bal_cents"),
     )
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
@@ -6602,10 +6386,7 @@ def returnflag_linestatus_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_linestatus",
         F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     grid = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
@@ -6620,8 +6401,9 @@ def returnflag_linestatus_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "revenue_share_bp",
             F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV (SUM(revenue_cents) OVER ()) AS BIGINT)"
+                scaled_ratio_sql(
+                    "revenue_cents", "(SUM(revenue_cents) OVER ())"
+                )
             ),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -6667,10 +6449,7 @@ def order_age_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.col("o_orderdate").cast("date").alias("odate"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     anchor = o.agg(F.max("odate").alias("anchor_date"))
     return (
@@ -6738,10 +6517,7 @@ def monthly_revenue_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month(CAST(o_orderdate AS DATE)) - 1"
         ).alias("m"),
         "o_custkey",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     return (
         o.groupBy("m")
@@ -6804,10 +6580,7 @@ def nation_balance_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.sum(
-                F.expr(
-                    "CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) "
-                    "AS BIGINT)"
-                )
+                F.expr(cents_sql("c_acctbal"))
             ).cast("long").alias("cust_cents"),
         )
     )
@@ -6817,10 +6590,7 @@ def nation_balance_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_suppliers"),
             F.sum(
-                F.expr(
-                    "CAST(floor(s_acctbal * 100 + CAST(0.5 AS DOUBLE)) "
-                    "AS BIGINT)"
-                )
+                F.expr(cents_sql("s_acctbal"))
             ).cast("long").alias("supp_cents"),
         )
     )
@@ -6893,10 +6663,7 @@ def brand_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             "year(CAST(l_shipdate AS DATE)) * 12 + "
             "month(CAST(l_shipdate AS DATE)) - 1"
         ).alias("m"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand"
@@ -7071,10 +6838,7 @@ def supplier_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     final agg is exactly 10 cells."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     per_supp = li.groupBy("l_suppkey").agg(
         F.sum("cents").cast("long").alias("rev_cents")
@@ -7096,8 +6860,7 @@ def supplier_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "revenue_share_bp",
             F.expr(
-                "CAST((CAST(decile_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV (SUM(decile_cents) OVER ()) AS BIGINT)"
+                scaled_ratio_sql("decile_cents", "(SUM(decile_cents) OVER ())")
             ),
         )
         .orderBy("decile")
@@ -7230,10 +6993,7 @@ def first_order_value_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.expr("CAST(o_orderdate AS DATE)").alias("od"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_cust = o.groupBy("o_custkey").agg(
         F.expr(
@@ -7338,10 +7098,7 @@ def brand_quarter_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "year(CAST(l_shipdate AS DATE)) * 4 + "
             "(quarter(CAST(l_shipdate AS DATE)) - 1)"
         ).alias("q"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("cents"),
     )
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand"
@@ -7424,14 +7181,13 @@ def net_multiplier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conditional l_orderkey spread (guide §2.5): map-only
     # fixed-point banding is the whole cost; integer sums invariant
     li = load_spread(spark, sf_dir, "lineitem", "l_orderkey").select(
+        F.expr(cents_sql("l_extendedprice")).alias("gross_cents"),
         F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("gross_cents"),
-        F.expr(
-            "CAST(floor((CAST(1.0 AS DOUBLE) - l_discount) * "
-            "(CAST(1.0 AS DOUBLE) + l_tax) * 10000 + "
-            "CAST(0.5 AS DOUBLE)) AS BIGINT)"
+            cents_sql(
+                "(CAST(1.0 AS DOUBLE) - l_discount)"
+                " * (CAST(1.0 AS DOUBLE) + l_tax)",
+                10000,
+            )
         ).alias("mult_x10k"),
     )
     banded = li.select(
@@ -7458,8 +7214,7 @@ def net_multiplier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.withColumn(
             "gross_share_bp",
             F.expr(
-                "CAST((CAST(gross_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV (SUM(gross_cents) OVER ()) AS BIGINT)"
+                scaled_ratio_sql("gross_cents", "(SUM(gross_cents) OVER ())")
             ),
         )
         .orderBy("band")
@@ -7588,18 +7343,8 @@ def linenumber_price_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     grid = li.groupBy("l_linenumber").agg(
         F.count(F.lit(1)).alias("n_lines"),
-        F.sum(
-            F.expr(
-                "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-                "AS BIGINT)"
-            )
-        ).alias("value_cents"),
-        F.sum(
-            F.expr(
-                "CAST(floor(l_discount * 10000 + CAST(0.5 AS DOUBLE)) "
-                "AS BIGINT)"
-            )
-        ).alias("disc_bp_sum"),
+        F.sum(F.expr(cents_sql("l_extendedprice"))).alias("value_cents"),
+        F.sum(F.expr(cents_sql("l_discount", 10000))).alias("disc_bp_sum"),
     )
     return (
         grid.select(
@@ -7747,13 +7492,9 @@ def unit_price_band_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = li.select(
         "l_returnflag",
         F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT) DIV CAST(l_quantity AS BIGINT)"
+            f"{cents_sql('l_extendedprice')} DIV CAST(l_quantity AS BIGINT)"
         ).alias("unit_cents"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("line_cents"),
+        F.expr(cents_sql("l_extendedprice")).alias("line_cents"),
     ).select(
         "l_returnflag",
         "line_cents",
@@ -7780,8 +7521,9 @@ def unit_price_band_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             # wraps silently (r11 code review — the same class the
             # r10 overflow sweep fixed)
             F.expr(
-                "CAST((CAST(revenue_cents AS DECIMAL(38,0)) * 10000) "
-                "DIV (SUM(revenue_cents) OVER ()) AS BIGINT)"
+                scaled_ratio_sql(
+                    "revenue_cents", "(SUM(revenue_cents) OVER ())"
+                )
             ).alias("revenue_share_bp"),
             F.expr(
                 "(n_lines * 10000) DIV (SUM(n_lines) OVER "
@@ -7855,23 +7597,17 @@ def order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_order = li.groupBy("l_orderkey").agg(
         F.sum(
             F.expr(
-                "(CAST(floor(l_extendedprice * 100 + "
-                "CAST(0.5 AS DOUBLE)) AS BIGINT) "
-                "* (10000 - CAST(floor(l_discount * 10000 + "
-                "CAST(0.5 AS DOUBLE)) AS BIGINT)) "
-                "* (10000 + CAST(floor(l_tax * 10000 + "
-                "CAST(0.5 AS DOUBLE)) AS BIGINT))) "
-                "DIV 100000000"
+                f"({cents_sql('l_extendedprice')}"
+                f" * (10000 - {cents_sql('l_discount', 10000)})"
+                f" * (10000 + {cents_sql('l_tax', 10000)}))"
+                " DIV 100000000"
             )
         ).alias("lines_cents")
     )
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.expr(
-            "CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) "
-            "AS BIGINT)"
-        ).alias("header_cents"),
+        F.expr(cents_sql("o_totalprice")).alias("header_cents"),
     )
     joined = orders.join(
         per_order, orders.o_orderkey == per_order.l_orderkey

@@ -37,6 +37,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ensembl_lakehouse_spark.functions.fixed import cents_sql, scaled_ratio_sql
 from ensembl_lakehouse_spark.functions.vectors import sql_cosine, sql_norm
 from ensembl_lakehouse_spark.sources.tables import load_spread, load_table, spread_scan
 
@@ -772,10 +773,7 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("nrm").alias("min_norm"),
         F.max("nrm").alias("max_norm"),
         F.sum(
-            F.expr(
-                f"CAST(floor(nrm * CAST({NORM_FP} AS DOUBLE)"
-                f" + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-            )
+            F.expr(cents_sql(f"nrm * CAST({NORM_FP} AS DOUBLE)", 1))
         ).alias("norm_mass_fp"),
     ).withColumn(
         "mean_norm",
@@ -2342,7 +2340,7 @@ def embedding_band_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan (100 TB): map-only per-vector array fold (zero explode,
     zero shuffle), then ONE ≤|labels| partial agg."""
-    q = "CAST(floor(CAST(x AS DOUBLE) * 1000 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+    q = cents_sql("CAST(x AS DOUBLE)", 1000)
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "label",
         F.expr(
@@ -2373,8 +2371,7 @@ def embedding_band_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ~1e18 at the 100 TB design point, and ×10⁴ in BIGINT
             # wraps silently (r11 code review)
             F.expr(
-                "CAST((CAST(lead_energy AS DECIMAL(38,0)) * 10000) "
-                "DIV total_energy AS BIGINT)"
+                scaled_ratio_sql("lead_energy", "total_energy")
             ).alias("pooled_lead_share_bp"),
             F.expr("share_bp_sum DIV n_vecs").alias(
                 "avg_lead_share_bp"

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ensembl_lakehouse_spark.functions.fixed import cents_sql
 from ensembl_lakehouse_spark.functions.hashing import ROLL_MOD, sql_md5_long60
 from ensembl_lakehouse_spark.functions.stats import pearson_e6
 from ensembl_lakehouse_spark.functions.text import (
@@ -2624,9 +2625,7 @@ def source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score"),
     ).select(
         "source",
-        F.expr(
-            "CAST(floor(score * 1000 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("score_x1000"),
+        F.expr(cents_sql("score", 1000)).alias("score_x1000"),
         (F.col("score") >= 0.5).cast("int").alias("keep"),
     )
     return (
@@ -3141,9 +3140,7 @@ def quality_by_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score"),
     ).select(
         "batch",
-        F.expr(
-            "CAST(floor(score * 1000 + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-        ).alias("score_x1000"),
+        F.expr(cents_sql("score", 1000)).alias("score_x1000"),
         (F.col("score") >= 0.5).cast("int").alias("keep"),
     )
     return (

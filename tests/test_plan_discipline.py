@@ -2,7 +2,7 @@
 representative queries so a future edit that sneaks an extra
 exchange into a hot path FAILS here instead of surfacing as a 2×
 regression at 100 TB. Counts come from the same final-adaptive-plan
-parser the PLANS.md audit uses (tools/explain_audit.summarize)."""
+parser the HTTP EXPLAIN surface uses (plans.explain.summarize)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 
 import __spark_entry__ as entry
 from ensembl_lakehouse_spark.operators.clustering import KM_ITERS
-from tools.explain_audit import summarize
+from ensembl_lakehouse_spark.plans.explain import summarize
 from tests.conftest import SF_DIR
 
 #: query -> (max hash shuffles, require zero shuffles?)
